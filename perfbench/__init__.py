@@ -1,0 +1,1 @@
+"""sparkgouv benchmark; run ``python3 perfbench/run.py --help``."""
