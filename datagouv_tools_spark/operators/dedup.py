@@ -130,7 +130,14 @@ def segment_dedup_marks(
     # gate's fan_out_batch — pass fan_out_input=False)
     if fan_out_input:
         df = fan_out_narrow_scan(df)
-    ts = tokens(text_col)
+    # Tokenize once into a column: with ``ts`` as an expression, Catalyst
+    # inlines the tokenizer into every F.slice of the transform lambda
+    # and re-splits the whole document per segment — O(L²) per doc (the
+    # trap functions/text.word_bigrams documents).
+    df = df.select(
+        F.col(id_col), *[F.col(c) for c in keep_cols], tokens(text_col).alias("__ts")
+    )
+    ts = F.col("__ts")
     n = F.size(ts)
     n_segs = F.ceil(n.cast("double") / F.lit(float(seg_len))).cast("int")
     # Guard n >= 1: sequence(0, -1) would step backwards, not be empty.

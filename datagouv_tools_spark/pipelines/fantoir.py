@@ -17,6 +17,7 @@ import zipfile
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.storagelevel import StorageLevel
 
 from datagouv_tools_spark.schema.ddl import EmptyIndexProvider, get_dialect
 from datagouv_tools_spark.schema.record_format import FANTOIR_FORMATS
@@ -49,13 +50,12 @@ def fantoir_tables(
     spark: SparkSession,
     fantoir_path: str | Path,
     staging_dir: str | None = None,
-    single_pass: bool = True,
 ) -> dict[str, DataFrame]:
     """Classified scan → {record_type: DataFrame} (all-string columns,
-    like the reference's all-TEXT tables, import_fantoir.py:160-163)."""
+    like the reference's all-TEXT tables, import_fantoir.py:160-163).
+    Lazy and uncached (see ``fantoir_record_tables``)."""
     path = _maybe_unzip(Path(fantoir_path), staging_dir)
-    classified = read_fantoir(spark, path)
-    return fantoir_record_tables(classified, FANTOIR_FORMATS, single_pass=single_pass)
+    return fantoir_record_tables(read_fantoir(spark, path), FANTOIR_FORMATS)
 
 
 def import_fantoir(
@@ -72,33 +72,41 @@ def import_fantoir(
     (connection=None) or parquet paths are returned per table. ``dsn``
     + ``bulk_copy`` enable the live-PostgreSQL COPY path (see
     sinks/sink.resolve_pg_load)."""
-    tables = fantoir_tables(spark, fantoir_path, staging_dir)
-    results: dict[str, list[str] | str] = {}
-    for name in LOADED_RECORD_TYPES:
-        df = tables[name]
-        if parquet_out:
-            from datagouv_tools_spark.sinks.sink import ParquetSink
+    path = _maybe_unzip(Path(fantoir_path), staging_dir)
+    # one file read shared by the three loads: Spark's cache serves the
+    # tables' plan-identical scan. Released when the loads end, so the
+    # next import reads the file afresh even if it was rewritten.
+    scan = read_fantoir(spark, path).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        tables = fantoir_tables(spark, path)
+        results: dict[str, list[str] | str] = {}
+        for name in LOADED_RECORD_TYPES:
+            df = tables[name]
+            if parquet_out:
+                from datagouv_tools_spark.sinks.sink import ParquetSink
 
-            results[name] = ParquetSink(parquet_out).write(df, name)
-        else:
-            dialect = get_dialect(rdbms)
-            from datagouv_tools_spark.sinks.sink import resolve_pg_load
-
-            connection, loader = resolve_pg_load(
-                connection, dsn, bulk_copy, rdbms, dialect
-            )
-            sink = SqlSink(
-                dialect=dialect,
-                executor=DryRunExecutor() if connection is None else _db_executor(connection),
-                index_provider=EmptyIndexProvider(),
-                loader=loader,
-            )
-            sink.write(df, name)
-            if isinstance(sink.executor, DryRunExecutor):
-                results[name] = sink.executor.statements
+                results[name] = ParquetSink(parquet_out).write(df, name)
             else:
-                results[name] = "loaded"
-    return results
+                dialect = get_dialect(rdbms)
+                from datagouv_tools_spark.sinks.sink import resolve_pg_load
+
+                connection, loader = resolve_pg_load(
+                    connection, dsn, bulk_copy, rdbms, dialect
+                )
+                sink = SqlSink(
+                    dialect=dialect,
+                    executor=DryRunExecutor() if connection is None else _db_executor(connection),
+                    index_provider=EmptyIndexProvider(),
+                    loader=loader,
+                )
+                sink.write(df, name)
+                if isinstance(sink.executor, DryRunExecutor):
+                    results[name] = sink.executor.statements
+                else:
+                    results[name] = "loaded"
+        return results
+    finally:
+        scan.unpersist()
 
 
 def _db_executor(connection):

@@ -3,11 +3,19 @@
 Spark's JDBC writer only does batched INSERT; the reference's COPY FROM
 STDIN is ~10× faster for bulk loads. The cluster-correct shape:
 
-    df.foreachPartition(partition → psycopg.copy_expert(COPY ..., csv))
+    df.mapInArrow(batches → one COPY ... FROM STDIN (FORMAT CSV) stream)
 
 Each executor task opens its own connection and streams its partition
-as CSV — the reference's "one connection per consumer thread"
-(import_fantoir.py:242-249) generalized to N partitions.
+— the reference's "one connection per consumer thread"
+(import_fantoir.py:242-249) generalized to N partitions. Rows never
+become Python objects: the task receives Arrow record batches
+(``spark.sql.execution.arrow.maxRecordsPerBatch`` rows each, which
+bounds task memory) and ``pyarrow.csv.write_csv`` renders each batch to
+one CSV chunk. Framing: NULL is an unquoted empty field, every non-null
+string is quoted (so the empty string stays ``""``, never NULL) with
+embedded quotes doubled, and ``TimestampType`` values carry an explicit
+UTC offset, so ``timestamp with time zone`` columns load the instant
+Spark holds whatever the worker's or the server's TimeZone.
 
 Driver dispatch: psycopg 3 (``cursor.copy()`` context) when present,
 else pg8000 — the reference's own driver (reference setup.py) — whose
@@ -15,12 +23,12 @@ DB-API cursor streams COPY via ``execute(sql, stream=file_like)``,
 else the ``psql`` CLI (``PsqlCliConnection``): the identical CSV byte
 stream is piped to ``psql -c "COPY ... FROM STDIN"``'s stdin, one
 subprocess per partition stream — for environments that ship the
-PostgreSQL client binary but no Python driver (this container). The
-CSV serialization, COPY statement text, and per-driver call sequences
-are additionally unit-tested against mocked connections (the
-reference's tests/sql/test_postgres.py pattern), and the whole staged
-path runs live in ``tests/test_schema.py::test_staged_copy_live_postgres``
-whenever PGHOST points at a real server.
+PostgreSQL client binary but no Python driver. The CSV serialization,
+COPY statement text, and per-driver call sequences are additionally
+unit-tested against mocked connections (the reference's
+tests/sql/test_postgres.py pattern), and the whole staged path runs
+live in ``tests/test_schema.py::test_staged_copy_live_postgres``
+whenever PGHOST points at a real server or local server binaries exist.
 
 Transactionality at scale: per-partition COPY loses the single-commit
 semantics of the reference. ``staged_copy`` therefore loads into a
@@ -33,48 +41,38 @@ from __future__ import annotations
 import io
 from typing import Iterable, Iterator
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from datagouv_tools_spark.schema.ddl import PostgresDialect
 
-__all__ = ["rows_to_csv_chunks", "copy_partition", "copy_dataframe", "staged_copy"]
-
-_CHUNK_BYTES = 1 << 20
+__all__ = ["batches_to_csv_chunks", "copy_partition", "copy_dataframe", "staged_copy"]
 
 
-def _csv_field(v) -> str:
-    """One COPY-CSV field with PostgreSQL's NULL/empty distinction:
-    NULL → unquoted empty; empty string → quoted ``""`` (csv.writer's
-    QUOTE_MINIMAL writes '' unquoted, which COPY would load as NULL —
-    silent data corruption for text columns); anything containing a
-    delimiter, quote, or newline is quoted with '""' doubling."""
-    if v is None:
-        return ""
-    s = str(v)
-    if s == "" or any(c in s for c in ',"\n\r'):
-        return '"' + s.replace('"', '""') + '"'
-    return s
+def batches_to_csv_chunks(batches: Iterable) -> Iterator[bytes]:
+    """Render Arrow record batches as COPY-CSV byte chunks, one chunk
+    per batch (FORMAT CSV, no header — column order fixed by the
+    DataFrame).
 
-
-def rows_to_csv_chunks(
-    rows: Iterable[Row], chunk_bytes: int = _CHUNK_BYTES
-) -> Iterator[bytes]:
-    """Serialize rows to CSV byte chunks suitable for COPY FROM STDIN
-    (FORMAT CSV, no header — column order fixed by the DataFrame).
+    ``pyarrow.csv.write_csv`` with ``quoting_style="needed"`` gives
+    exactly PostgreSQL's NULL/empty distinction: NULL is an unquoted
+    empty field, every non-null string is quoted (so ``""`` stays the
+    empty string) with embedded ``"`` doubled. Timezone-aware
+    timestamps carry their explicit UTC offset.
 
     Framing is validated end-to-end by a second, non-Python parser:
     tests round-trip the exact streamed bytes through DuckDB's
     ``read_csv`` (tests/test_schema.py)."""
-    buf = io.StringIO()
-    for row in rows:
-        buf.write(",".join(_csv_field(v) for v in row))
-        buf.write("\n")
-        if buf.tell() >= chunk_bytes:
-            yield buf.getvalue().encode("utf-8")
-            buf.seek(0)
-            buf.truncate()
-    if buf.tell():
-        yield buf.getvalue().encode("utf-8")
+    import pyarrow as pa
+    from pyarrow import csv
+
+    options = csv.WriteOptions(include_header=False, quoting_style="needed")
+    for batch in batches:
+        if batch.num_rows:
+            sink = pa.BufferOutputStream()
+            csv.write_csv(batch, sink, options)
+            yield sink.getvalue().to_pybytes()
 
 
 def _parse_dsn(dsn: str) -> dict:
@@ -259,7 +257,7 @@ class PsqlCliConnection:
     Statements queue until ``commit()``, which replays them inside one
     ``psql --single-transaction`` invocation; COPY streams the chunk
     iterator straight into the subprocess's stdin. All the byte-level
-    framing (``rows_to_csv_chunks``) is shared with the driver paths."""
+    framing (``batches_to_csv_chunks``) is shared with the driver paths."""
 
     def __init__(self, dsn: str):
         # never put credentials in argv: process listings on shared
@@ -383,28 +381,52 @@ def _copy_with_connection(conn, copy_sql: str, chunks: Iterator[bytes]) -> None:
         cur.close()
 
 
-def copy_partition(dsn: str, copy_sql: str, rows: Iterable[Row], connect=None) -> None:
+def copy_partition(dsn: str, copy_sql: str, batches: Iterable, connect=None) -> None:
     """Executor-side body: one connection, one COPY stream per
-    partition. ``connect`` is injectable for tests."""
+    partition, fed one Arrow batch at a time. ``connect`` is injectable
+    for tests."""
     conn = (connect or _connect)(dsn)
     try:
-        _copy_with_connection(conn, copy_sql, rows_to_csv_chunks(rows))
+        _copy_with_connection(conn, copy_sql, batches_to_csv_chunks(batches))
         conn.commit()
     finally:
         conn.close()
 
 
+def _copy_projection(df: DataFrame) -> DataFrame:
+    """Render the columns Arrow's CSV writer cannot put in PostgreSQL
+    input form: binary as bytea hex (``\\x0AFF``), nested types as
+    Spark's text rendering (their DDL column is ``text``)."""
+    nested = (T.ArrayType, T.MapType, T.StructType)
+    if not any(isinstance(f.dataType, (T.BinaryType, *nested)) for f in df.schema.fields):
+        return df
+    cols = []
+    for f in df.schema.fields:
+        c = F.col("`" + f.name.replace("`", "``") + "`")
+        if isinstance(f.dataType, T.BinaryType):
+            c = F.concat(F.lit("\\x"), F.hex(c))
+        elif isinstance(f.dataType, nested):
+            c = c.cast("string")
+        cols.append(c.alias(f.name))
+    return df.select(*cols)
+
+
 def copy_dataframe(df: DataFrame, dsn: str, table: str, num_partitions: int | None = None) -> None:
-    """Distributed COPY: every partition streams concurrently."""
-    dialect = PostgresDialect()
-    copy_sql = dialect.copy_from_csv(table, header=False)
+    """Distributed COPY: every partition streams concurrently. Each
+    task receives its partition as Arrow record batches
+    (``mapInArrow``), so task memory is one batch
+    (``spark.sql.execution.arrow.maxRecordsPerBatch`` rows), and no row
+    is ever materialized as a Python object."""
+    copy_sql = PostgresDialect().copy_from_csv(table, header=False)
+    df = _copy_projection(df)
     if num_partitions:
         df = df.repartition(num_partitions)
 
-    def run(partition: Iterable[Row]) -> None:
-        copy_partition(dsn, copy_sql, partition)
+    def run(batches: Iterator) -> Iterator:
+        copy_partition(dsn, copy_sql, batches)
+        return iter(())
 
-    df.foreachPartition(run)
+    df.mapInArrow(run, "loaded boolean").collect()
 
 
 def staged_copy(

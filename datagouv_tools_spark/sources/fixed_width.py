@@ -9,8 +9,9 @@ scale-correct single-pass plan (reference dispatches line-by-line to 4
 outputs, import_fantoir.py:166-206):
 
 - classify each line once (``classify_fantoir_record``),
-- either ``persist()`` the classified scan and derive 4 filtered
-  DataFrames (local/interactive), or write one staged parquet
+- either ``persist()`` the classified scan for the duration of the
+  loads and derive 4 filtered DataFrames (local/interactive), or write
+  one staged parquet
   ``partitionBy("record_type")`` and re-read per type (cluster-scale —
   one scan, partition-pruned downstream reads).
 """
@@ -64,22 +65,21 @@ def read_fantoir(
 def fantoir_record_tables(
     classified: DataFrame,
     formats: dict[str, RecordFormat] | None = None,
-    single_pass: bool = True,
 ) -> dict[str, DataFrame]:
     """Demux the classified scan into one DataFrame per record type (D1).
 
-    ``single_pass=True`` persists the classified scan so the four
-    filtered projections share one file read (the reference's one-pass
-    dispatcher). At 100 TB prefer ``stage_fantoir`` below: a
-    partitionBy("record_type") parquet write, then partition-pruned
-    reads — persist() would need the whole file in cluster memory/disk
-    cache, staging costs one write but is restartable and spill-free.
+    The frames are lazy and cache nothing: each one re-reads the file
+    unless the caller persists ``classified`` (or a plan-identical
+    ``read_fantoir`` scan, which Spark's cache matches) for as long as
+    it reads several tables — ``pipelines.fantoir.import_fantoir`` does
+    so for its three loads and releases the cache when they end, so a
+    rewritten file is never served from a stale cache. At 100 TB prefer
+    ``stage_fantoir`` below: a partitionBy("record_type") parquet write,
+    then partition-pruned reads — persist() would need the whole file in
+    cluster memory/disk cache, staging costs one write but is
+    restartable and spill-free.
     """
     formats = formats or FANTOIR_FORMATS
-    if single_pass:
-        from pyspark.storagelevel import StorageLevel
-
-        classified = classified.persist(StorageLevel.MEMORY_AND_DISK)
     return {
         name: fmt.apply(classified.filter(F.col("record_type") == name))
         for name, fmt in formats.items()

@@ -315,6 +315,32 @@ def test_import_fantoir_sqlite_end_to_end(spark, fantoir_file, tmp_path):
         con.close()
 
 
+def test_import_fantoir_reimport_reads_rewritten_file(spark, fantoir_file, tmp_path):
+    """A second import in the same session loads the file as it is now:
+    the classified scan is cached only for the duration of one import,
+    never served stale to the next one."""
+    import sqlite3
+
+    con = sqlite3.connect(tmp_path / "fantoir.db")
+    try:
+        import_fantoir(spark, fantoir_file, rdbms="sqlite", connection=con)
+        assert con.execute("SELECT libelle_voie FROM voie").fetchall() == [("BELLEVUE",)]
+
+        header, direction, commune, voie, trailer = build_fantoir_lines()
+        voies = [voie.replace("BELLEVUE", "REPUBLIQ")] * 5
+        fantoir_file.write_text(
+            "\n".join([header, direction, commune, *voies, trailer]) + "\n",
+            encoding="latin-1",
+        )
+        import_fantoir(spark, fantoir_file, rdbms="sqlite", connection=con)
+        assert con.execute("SELECT libelle_voie FROM voie").fetchall() == [("REPUBLIQ",)] * 5
+        assert con.execute("SELECT COUNT(*) FROM commune").fetchone()[0] == 1
+    finally:
+        con.close()
+    level = read_fantoir(spark, fantoir_file).storageLevel
+    assert not (level.useMemory or level.useDisk)  # the import's cache is released
+
+
 def test_import_deces_sqlite_end_to_end(spark, deces_file, tmp_path):
     import sqlite3
 
@@ -508,7 +534,7 @@ def test_import_sirene_live_postgres_bulk_copy(spark, sirene_dir, pg_dsn):
 def test_import_fantoir_live_postgres_bulk_copy(spark, fantoir_file, pg_dsn):
     """FANTOIR's multi-record demux loaded live: all three record-type
     tables land in PostgreSQL through the COPY fast path with their
-    DDL, and the row contents survive."""
+    DDL, and every row and column survives (empty strings included)."""
     from datagouv_tools_spark.sinks.pg_copy import _connect
 
     out = import_fantoir(spark, fantoir_file, rdbms="pg", dsn=pg_dsn, bulk_copy=True)
@@ -516,16 +542,21 @@ def test_import_fantoir_live_postgres_bulk_copy(spark, fantoir_file, pg_dsn):
     conn = _connect(pg_dsn)
     try:
         cur = conn.cursor()
-        counts = {}
+        got = {}
         for tbl in ("direction", "commune", "voie"):
-            cur.execute(f'SELECT COUNT(*) FROM "{tbl}"')
-            counts[tbl] = int(cur.fetchall()[0][0])
+            cur.execute(f'SELECT * FROM "{tbl}"')
+            got[tbl] = sorted((tuple(r) for r in cur.fetchall()), key=repr)
             cur.execute(f'DROP TABLE "{tbl}"')
         cur.close()
         conn.commit()
     finally:
         conn.close()
-    assert counts == {"direction": 1, "commune": 1, "voie": 1}
+    tables = fantoir_tables(spark, fantoir_file)
+    expect = {
+        tbl: sorted((tuple(r) for r in tables[tbl].collect()), key=repr) for tbl in got
+    }
+    assert all(len(rows) == 1 for rows in expect.values())
+    assert got == expect
 
 
 def test_import_deces_live_postgres_bulk_copy(spark, deces_file, pg_dsn):
@@ -538,8 +569,8 @@ def test_import_deces_live_postgres_bulk_copy(spark, deces_file, pg_dsn):
     conn = _connect(pg_dsn)
     try:
         cur = conn.cursor()
-        cur.execute('SELECT nom, prenom1 FROM "deces" ORDER BY nom')
-        rows = [tuple(r) for r in cur.fetchall()]
+        cur.execute('SELECT * FROM "deces"')
+        rows = sorted((tuple(r) for r in cur.fetchall()), key=repr)
         cur.execute(
             "SELECT indexname FROM pg_indexes WHERE tablename = 'deces'"
         )
@@ -549,7 +580,9 @@ def test_import_deces_live_postgres_bulk_copy(spark, deces_file, pg_dsn):
         conn.commit()
     finally:
         conn.close()
-    assert ("DUPONT", "JEAN") in rows
+    expect = sorted((tuple(r) for r in deces_dataframe(spark, deces_file).collect()), key=repr)
+    assert len(expect) == 3
+    assert rows == expect
     assert any("nom" in ix for ix in indexes), indexes
 
 

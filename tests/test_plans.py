@@ -410,6 +410,22 @@ def test_segment_dedup_shuffles_hashes_not_text(spark, sf_dir):
     assert "BroadcastHashJoin" in plan
 
 
+def test_segment_dedup_tokenizes_once(spark, sf_dir):
+    """The segment fan-out must slice a materialized token column: a
+    tokenizer expression inside the transform lambda re-splits the
+    whole document once per segment (O(L²) per document)."""
+    from datagouv_tools_spark.operators.dedup import segment_dedup_marks
+    from datagouv_tools_spark.plans.inspect import physical_plan
+    from datagouv_tools_spark.sources.catalog import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    plan = physical_plan(segment_dedup_marks(docs, "doc_id", "text", seg_len=8))
+    args = re.findall(r"\(\d+\) Generate\n(?:.+\n)*?Arguments: (.+)\n", plan)
+    assert args, "expected the segment Generate node"
+    for a in args:
+        assert "posexplode" in a and "split(" not in a, a
+
+
 def test_incremental_rollup_dirty_repair_broadcasts(spark, sf_dir):
     """The maintenance query's extrema repair must reach the base via a
     broadcast semi-join on dirty keys AT RUNTIME (a shuffled semi-join
